@@ -55,9 +55,8 @@ object Graph {
 
   /** The UNPINNED distinct src-partitioned edge table — callers that
     * share one edge table across several iterative queries pin this
-    * once (e.g. [[graft.operators.PlanCache.memoPersisted]], which
-    * keeps the HashPartitioning(src) a localCheckpoint would lose) and
-    * pass it to the `*OnEdges` entry points below. */
+    * once (e.g. [[Memo.frame]] with `persist`, which keeps the
+    * HashPartitioning(src) a localCheckpoint would lose) and pass it to the `*OnEdges` entry points below. */
   def distinctEdges(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"))
       .repartition(col("src"))

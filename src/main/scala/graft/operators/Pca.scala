@@ -34,15 +34,10 @@ object Pca {
 
   private val Fp = 16777216.0 // 2^24 fixed-point scale
 
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int), Model]()
-
-  /** Fit the top-`r` principal components (memoized per analyzed plan,
-    * same contract as the k-means/PQ trainer caches). */
+  /** Fit the top-`r` principal components (memoized per corpus,
+    * [[Memo.value]]). */
   def fit(corpus: DataFrame, r: Int): Model =
-    modelCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash().toLong, r),
-      _ => train(corpus, r))
+    Memo.value(corpus, s"pca:$r")(train(corpus, r))
 
   private def train(corpus: DataFrame, r: Int): Model = {
     val spark = corpus.sparkSession

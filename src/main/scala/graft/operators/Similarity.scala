@@ -74,7 +74,7 @@ object Similarity {
     val spark = queries.sparkSession
     val p = if (nPlanes > 0) nPlanes
             else graft.functions.VectorFunctions.adaptivePlanes(
-              graft.operators.PlanCache.countMemo(corpus), targetOcc = 16)
+              Memo.count(corpus), targetOcc = 16)
     val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_vec"),
       col("label").as("n_label"))
       .withColumn("n_n", vecDot(spark, col("n_vec"), col("n_vec")))
@@ -145,30 +145,6 @@ object Similarity {
         col("cos_micro"))
   }
 
-  /** Lloyd-refined k-means centroids over the corpus embedding column.
-    *
-    * Seeded deterministically from the `nCentroids` lowest vec_ids, then
-    * `iters` assignment/mean rounds. Each round is scale-shaped: the
-    * assignment is MAP-ONLY (centroids are literal arrays compiled into
-    * the plan — `array_position(projs, array_max(projs))` argmax, no
-    * window, no shuffle of the corpus), and the mean is one
-    * posexplode + hash aggregation on (cid, pos) with map-side partial
-    * combine, so the shuffle carries k*dim partial sums per task, not
-    * rows. Centroids themselves are tiny by definition and are collected
-    * per round, which also truncates the iteration lineage. */
-  /** Per-JVM centroid memo — IVF index construction is "train once,
-    * probe many": the three IVF-family queries (topK, SQ8-composed,
-    * classify) share one training when given the same corpus plan and
-    * parameters. Safe because centroids are BIT-stable (deterministic
-    * sample + order-independent fixed-point mean, spec-asserted), so a
-    * cache hit returns exactly what retraining would. Keyed on the
-    * ANALYZED plan's semantic hash: a different source path, filter, or
-    * even partitioning yields a different key and retrains. Same
-    * staleness contract as Spark's own table cache (a rewrite behind an
-    * unchanged plan is not detected within the JVM). */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Long), Array[Array[Float]]]()
-
   /** Corpus-adaptive centroid count: k = ceil(sqrt(n)) from the
     * memoized corpus count, floor 16 — the FAISS-shaped nlist ~ sqrt(n)
     * operating point, where cluster count and expected list size BOTH
@@ -198,11 +174,29 @@ object Similarity {
     * sample. */
   def trainRowsFor(k: Int): Long = math.max(100000L, 20L * k)
 
+  /** Lloyd-refined k-means centroids over the corpus embedding column.
+    *
+    * Seeded deterministically from the `nCentroids` lowest vec_ids, then
+    * `iters` assignment/mean rounds. Each round is scale-shaped: the
+    * assignment is MAP-ONLY (centroids are literal arrays compiled into
+    * the plan — `array_position(projs, array_max(projs))` argmax, no
+    * window, no shuffle of the corpus), and the mean is one
+    * posexplode + hash aggregation on (cid, pos) with map-side partial
+    * combine, so the shuffle carries k*dim partial sums per task, not
+    * rows. Centroids themselves are tiny by definition and are collected
+    * per round, which also truncates the iteration lineage.
+    *
+    * Memoized per corpus and parameters ([[Memo.value]]) — IVF index
+    * construction is "train once, probe many": the three IVF-family
+    * queries (topK, SQ8-composed, classify) share one training. Safe
+    * because centroids are BIT-stable (deterministic sample +
+    * order-independent fixed-point mean, spec-asserted), so a hit
+    * returns exactly what retraining would. */
   def kmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int = 3,
                       maxTrainRows: Long = 100000L): Array[Array[Float]] =
-    centroidCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash(), nCentroids, iters, maxTrainRows),
-      _ => trainKmeansCentroids(corpus, nCentroids, iters, maxTrainRows))
+    Memo.value(corpus, s"kmeans:$nCentroids:$iters:$maxTrainRows") {
+      trainKmeansCentroids(corpus, nCentroids, iters, maxTrainRows)
+    }
 
   private def trainKmeansCentroids(corpus: DataFrame, nCentroids: Int, iters: Int,
                                    maxTrainRows: Long): Array[Array[Float]] = {
@@ -252,7 +246,7 @@ object Similarity {
     * keep vec_ids with hash % mod == 0. Rides the memoized corpus
     * count, so adaptive-k derivation and sample sizing share one scan. */
   private def TrainSampleMod(corpus: DataFrame, maxTrainRows: Long): Long = {
-    val n = graft.operators.PlanCache.countMemo(corpus)
+    val n = Memo.count(corpus)
     math.max(1L, n / math.max(1L, maxTrainRows))
   }
 
@@ -285,7 +279,7 @@ object Similarity {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCentroids: Int = 0, nProbe: Int = 0, kmeansIters: Int = 3): DataFrame = {
     val kc = if (nCentroids > 0) nCentroids
-             else adaptiveCentroids(graft.operators.PlanCache.countMemo(corpus))
+             else adaptiveCentroids(Memo.count(corpus))
     val cents = kmeansCentroids(corpus, kc, kmeansIters, trainRowsFor(kc))
     // Materialized like ivfPqTopK's cq: the assigned corpus IS the
     // stored index (ann_ivf_stored reads it from the lake); deriving
@@ -423,7 +417,7 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val kc = if (nCentroids > 0) nCentroids
-             else adaptiveCentroids(graft.operators.PlanCache.countMemo(corpus))
+             else adaptiveCentroids(Memo.count(corpus))
     val np = if (nProbe > 0) nProbe else adaptiveProbe(kc)
     val cents = kmeansCentroids(corpus, kc, kmeansIters, trainRowsFor(kc))
     // Stored/hot corpus representation: (centroid list id, int8 codes).
@@ -459,23 +453,19 @@ object Similarity {
     exactRescore(queries, corpus, shortlist, k)
   }
 
-  /** Per-JVM PQ codebook memo (same contract as `centroidCache`:
-    * deterministic training, keyed on the analyzed plan + params). */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int, Int, Long), Array[Array[Array[Float]]]]()
-
   /** Product-quantization codebooks: `nSub` subspaces, each with its own
     * `nCodes`-centroid k-means codebook trained by Lloyd iterations on a
     * deterministic hash-bounded sample. Training is DRIVER-side over the
     * bounded sample (the documented train-on-sample design: at 100 TB
     * you never iterate Lloyd distributedly over 10^11 vectors; the
     * sample collect is <= maxTrainRows rows once, and driver arithmetic
-    * is trivially bit-stable). Encoding and search stay distributed. */
+    * is trivially bit-stable). Encoding and search stay distributed.
+    * Memoized per corpus and parameters ([[Memo.value]]). */
   def pqCodebooks(corpus: DataFrame, nSub: Int, nCodes: Int,
                   kmeansIters: Int = 4, maxTrainRows: Long = 20000L): Array[Array[Array[Float]]] =
-    pqCache.computeIfAbsent(
-      (corpus.queryExecution.analyzed.semanticHash().toLong, nSub, nCodes, kmeansIters, maxTrainRows),
-      _ => trainPqCodebooks(corpus, nSub, nCodes, kmeansIters, maxTrainRows))
+    Memo.value(corpus, s"pq:$nSub:$nCodes:$kmeansIters:$maxTrainRows") {
+      trainPqCodebooks(corpus, nSub, nCodes, kmeansIters, maxTrainRows)
+    }
 
   private def trainPqCodebooks(corpus: DataFrame, nSub: Int, nCodes: Int,
                                kmeansIters: Int, maxTrainRows: Long): Array[Array[Array[Float]]] = {
@@ -640,7 +630,7 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val kc = if (nCentroids > 0) nCentroids
-             else adaptiveCentroids(graft.operators.PlanCache.countMemo(corpus))
+             else adaptiveCentroids(Memo.count(corpus))
     val np = if (nProbe > 0) nProbe else adaptiveProbe(kc)
     val cents = kmeansCentroids(corpus, kc, kmeansIters, trainRowsFor(kc))
     val books = pqCodebooks(corpus, nSub, nCodes)
@@ -725,7 +715,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val bb = if (bandBits > 0) bandBits
              else graft.functions.VectorFunctions.adaptivePlanes(
-               graft.operators.PlanCache.countMemo(corpus), targetOcc = 4)
+               Memo.count(corpus), targetOcc = 4)
     val c = corpus.select(col("vec_id"), col("embedding"))
       .withColumn("n", vecDot(spark, col("embedding"), col("embedding")))
     val bands = c.select(col("vec_id").as("id"),
@@ -829,7 +819,7 @@ object Similarity {
   def semanticNearDupPairs(corpus: DataFrame, nCentroids: Int = 0): DataFrame = {
     val spark = corpus.sparkSession
     val k0 = if (nCentroids > 0) nCentroids
-             else adaptiveClusterCount(graft.operators.PlanCache.countMemo(corpus))
+             else adaptiveClusterCount(Memo.count(corpus))
     val cents = kmeansCentroids(corpus, k0, iters = 3, maxTrainRows = trainRowsFor(k0))
     val c = corpus.select(col("vec_id"), col("embedding"))
       .withColumn("n", vecDot(spark, col("embedding"), col("embedding")))

@@ -42,7 +42,7 @@ object GraphQueries {
     * variants consume this one pinned table (the weighted one adds its
     * unit weight column on top) instead of re-deriving it. */
   private def purchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"graph:purchase-edges:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:purchase-edges:$dir") {
       val raw = t(spark, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(broadcast(t(spark, dir, "orders").select(col("o_orderkey"), col("o_custkey"))),
           col("l_orderkey") === col("o_orderkey"))
@@ -60,7 +60,7 @@ object GraphQueries {
     * time at sf0.1; the BFS traversal projects (src, dst) off the same
     * table, partitioning intact). */
   private def degreedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-degreed:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:pe-degreed:$dir", persist = true) {
       Graph.degreeEdges(purchaseEdges(spark, dir))
     }
 
@@ -95,7 +95,7 @@ object GraphQueries {
     * sum to the multiplicity), memoized persisted for the same
     * partitioning-and-once-per-session reasons. */
   private def weightedDegreedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-wdegreed:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:pe-wdegreed:$dir", persist = true) {
       Graph.weightedDegreeEdges(purchaseEdges(spark, dir).withColumn("w", lit(1L)))
     }
 
@@ -455,7 +455,7 @@ object GraphQueries {
     * consume this table, so the second caller reuses the pinned blocks
     * instead of re-running the two shuffles and the window. */
   private def coSupplierEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"graph:co-supplier-edges:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:co-supplier-edges:$dir") {
       coSupplierEdgesUncached(spark, dir)
     }
 
@@ -608,7 +608,7 @@ object GraphQueries {
   /** The full weighted edge list, memoized per (session, dir): both
     * SSSP variants consume this one table. */
   private def weightedPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"graph:purchase-wedges:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:purchase-wedges:$dir") {
       symWeightedPairs(spark, dir, lit(true))
     }
 
@@ -639,7 +639,7 @@ object GraphQueries {
     * partitioning-and-once-per-session contract as
     * [[degreedPurchaseEdges]]. */
   private def minWeightPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memoPersisted(spark, s"graph:pe-minw:$dir") {
+    graft.operators.Memo.frame(spark, s"graph:pe-minw:$dir", persist = true) {
       Graph.minWeightEdges(weightedPurchaseEdges(spark, dir))
     }
 

@@ -850,7 +850,7 @@ object RelationalQueries {
     * suffices at any scale. */
   def qHeavyHittersApprox(spark: SparkSession, dir: String): DataFrame = {
     val orders = t(spark, dir, "orders")
-    val approxD = graft.operators.PlanCache.scalarMemo(orders, "approx_distinct:o_custkey") {
+    val approxD = graft.operators.Memo.value(orders, "approx_distinct:o_custkey") {
       orders.agg(approx_count_distinct(col("o_custkey")).as("d"))
         .head().getLong(0) // one bounded row
     }

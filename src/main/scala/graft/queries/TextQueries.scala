@@ -26,7 +26,7 @@ object TextQueries {
     * intermediate a lexical index builds from — pinning it is the
     * design, not a shortcut. */
   private[graft] def termsTable(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"text:terms:$dir") {
+    graft.operators.Memo.frame(spark, s"text:terms:$dir") {
       docs(spark, dir).select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     }
 
@@ -739,7 +739,7 @@ object TextQueries {
     * both consume exactly this table (the pinned kept_text column is
     * corpus-sized text, small next to the derivation it saves). */
   private def charDedupFullTable(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"text:char-dedup-full:$dir") {
+    graft.operators.Memo.frame(spark, s"text:char-dedup-full:$dir") {
       charDedupSpansFull(docs(spark, dir), L = 40)
     }
 
@@ -945,14 +945,14 @@ object TextQueries {
   }
 
   /** Shared near-dup pair plan (word-3-gram Jaccard >= 0.6), memoized
-    * per (session, dir) via PlanCache: six driver queries consume this
+    * per (session, dir) via Memo: six driver queries consume this
     * one derivation (the pairs query itself, survivors, corpus,
     * cluster sizes, stats, incremental survivors), so the prefix-
     * filtered candidate join + exact verify runs once per session and
     * every later consumer reuses the pinned blocks — the CC labeling
-    * on top is additionally memoized per pair plan by the ccCache. */
+    * on top is additionally memoized per pair plan. */
   private def jaccardPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"dedup:jaccard-pairs:$dir") {
+    graft.operators.Memo.frame(spark, s"dedup:jaccard-pairs:$dir") {
       Dedup.ngramJaccardPairs(docs(spark, dir), tauBp = 6000L)
     }
 

@@ -115,7 +115,7 @@ object VectorQueries {
     * re-running the broadcast scan (the same sharing contract as the
     * graph-family edge derivations). */
   private def vecTop20(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"vec:bf-top20:$dir") {
+    graft.operators.Memo.frame(spark, s"vec:bf-top20:$dir") {
       val all = emb(spark, dir)
       Similarity.bruteForceTopK(all.where(col("vec_id") % 100 === 0), all, k = 20)
         .select(col("q_id"), col("n_id").as("doc_id"), col("rnk").cast("long").as("vec_rnk"))
@@ -260,7 +260,7 @@ object VectorQueries {
     // derives the same probe width from the reloaded centroids alone.
     Similarity.commitCentroidsIfAbsent(spark, root)(
       Similarity.kmeansCentroids(all,
-        Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all))))
+        Similarity.adaptiveCentroids(graft.operators.Memo.count(all))))
     val cents = Similarity.readCommittedCentroids(spark, root)
     // Two arrival batches assigned independently map-only — the union
     // IS the incrementally-built index (spec'd equal to a full rebuild).
@@ -336,7 +336,7 @@ object VectorQueries {
     val centRoot = ivfCentroidRoot(spark, dir)
     Similarity.commitCentroidsIfAbsent(spark, centRoot)(
       Similarity.kmeansCentroids(all,
-        Similarity.adaptiveCentroids(graft.operators.PlanCache.countMemo(all))))
+        Similarity.adaptiveCentroids(graft.operators.Memo.count(all))))
     val cents = Similarity.readCommittedCentroids(spark, centRoot)
     val root = graft.sinks.LakeRoot.child(base, "lists")
     val schema = spark.read.parquet(src).schema
@@ -550,7 +550,7 @@ object VectorQueries {
     * this table (narrow meta rows, not pixels), so the second consumer
     * reuses the pinned blocks. */
   private def videoFramesTable(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"mm:video-frames:$dir") {
+    graft.operators.Memo.frame(spark, s"mm:video-frames:$dir") {
       val media = Multimodal.syntheticAvis(spark, TableLoader.load(spark, dir, "documents"))
       graft.multimodal.MediaOps.videoFrames(media).toDF()
     }
@@ -595,7 +595,7 @@ object VectorQueries {
     * (doc-count solid-color PNGs), so pinning them is cheap. */
   private def imageMediaTable(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    graft.operators.PlanCache.memo(spark, s"mm:png-media:$dir") {
+    graft.operators.Memo.frame(spark, s"mm:png-media:$dir") {
       Multimodal.syntheticImages(spark, TableLoader.load(spark, dir, "documents")).toDF()
     }.as[Multimodal.MediaRow]
   }
@@ -630,7 +630,7 @@ object VectorQueries {
     * survivor terminal (mm_phash_survivors), and upstream of it sits
     * the real PNG decode of the whole media corpus — decode once. */
   private def phashPairsTable(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"mm:phash-pairs:$dir") {
+    graft.operators.Memo.frame(spark, s"mm:phash-pairs:$dir") {
       val media = Multimodal.syntheticPatternImages(
         spark, TableLoader.load(spark, dir, "documents"))
       val hashes = graft.multimodal.MediaOps.imageDHash(media).toDF()
@@ -677,7 +677,7 @@ object VectorQueries {
   /** Audio-fingerprint near-dup pairs, memoized per (session, dir) —
     * same decode-once rationale as [[phashPairsTable]]. */
   private def audioFpPairsTable(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.PlanCache.memo(spark, s"mm:audiofp-pairs:$dir") {
+    graft.operators.Memo.frame(spark, s"mm:audiofp-pairs:$dir") {
       val media = Multimodal.syntheticPatternWavs(
         spark, TableLoader.load(spark, dir, "documents"))
       val hashes = graft.multimodal.MediaOps.audioFingerprint(media).toDF()

@@ -251,47 +251,47 @@ class GraphSpec extends SparkSpec {
       s"8-iter pageRank left ${afterPr - afterLpa} pinned RDDs (want <= 1: final ranks)")
   }
 
-  test("PlanCache memoizes a named derivation per session and is clearable") {
-    graft.operators.PlanCache.clear()
+  test("Memo.frame memoizes a named derivation per session and is clearable") {
+    graft.operators.Memo.clear()
     var builds = 0
     def build() = { builds += 1; Seq((1L, 2L), (3L, 4L)).toDF("src", "dst") }
-    val a = graft.operators.PlanCache.memo(spark, "spec:edges")(build())
-    val b = graft.operators.PlanCache.memo(spark, "spec:edges")(build())
+    val a = graft.operators.Memo.frame(spark, "spec:edges")(build())
+    val b = graft.operators.Memo.frame(spark, "spec:edges")(build())
     assert(builds === 1, "second memo call must reuse the cached plan")
     assert(a.collect().toSet === b.collect().toSet)
-    assert(graft.operators.PlanCache.size === 1)
+    assert(graft.operators.Memo.size === 1)
     // distinct key -> distinct entry; clear() drops everything
-    graft.operators.PlanCache.memo(spark, "spec:edges2")(build())
-    assert(builds === 2 && graft.operators.PlanCache.size === 2)
-    graft.operators.PlanCache.clear()
-    assert(graft.operators.PlanCache.size === 0)
-    graft.operators.PlanCache.memo(spark, "spec:edges")(build())
+    graft.operators.Memo.frame(spark, "spec:edges2")(build())
+    assert(builds === 2 && graft.operators.Memo.size === 2)
+    graft.operators.Memo.clear()
+    assert(graft.operators.Memo.size === 0)
+    graft.operators.Memo.frame(spark, "spec:edges")(build())
     assert(builds === 3, "cleared cache must rebuild")
-    graft.operators.PlanCache.clear()
+    graft.operators.Memo.clear()
   }
 
   test("graph queries share memoized edge derivations (one entry per family)") {
-    graft.operators.PlanCache.clear()
+    graft.operators.Memo.clear()
     val tri = graft.queries.GraphQueries.qTriangles(spark, Sf).collect()
     assert(tri.nonEmpty)
-    val sizeAfterTri = graft.operators.PlanCache.size
+    val sizeAfterTri = graft.operators.Memo.size
     val lpa = graft.queries.GraphQueries.qLabelProp(spark, Sf).collect()
     assert(lpa.nonEmpty)
     // label prop reuses triangles' co-supplier table: no new entry
-    assert(graft.operators.PlanCache.size === sizeAfterTri)
+    assert(graft.operators.Memo.size === sizeAfterTri)
     val pr = graft.queries.GraphQueries.qPageRank(spark, Sf).collect()
-    val sizeAfterPr = graft.operators.PlanCache.size
+    val sizeAfterPr = graft.operators.Memo.size
     // BFS shares BOTH of pagerank's tables (the raw purchase edges and
     // the degreed iteration table): no new entry.
     val bfs = graft.queries.GraphQueries.qGraphBfs(spark, Sf).collect()
     assert(pr.nonEmpty && bfs.nonEmpty)
-    assert(graft.operators.PlanCache.size === sizeAfterPr)
+    assert(graft.operators.Memo.size === sizeAfterPr)
     // The weighted variant adds exactly its own weighted iteration
     // table on top of the shared purchase edges.
     val prw = graft.queries.GraphQueries.qPageRankWeighted(spark, Sf).collect()
     assert(prw.nonEmpty)
-    assert(graft.operators.PlanCache.size === sizeAfterPr + 1)
-    graft.operators.PlanCache.clear()
+    assert(graft.operators.Memo.size === sizeAfterPr + 1)
+    graft.operators.Memo.clear()
   }
 
   test("integer BM25 ranks a term-stuffed short doc above a diluted long doc") {
@@ -365,10 +365,9 @@ class GraphSpec extends SparkSpec {
     minw.unpersist()
   }
 
-  test("memoPersisted keeps the hash partitioning a localCheckpoint would lose") {
-    import graft.operators.PlanCache
+  test("a persisted Memo.frame keeps the hash partitioning a localCheckpoint would lose") {
     val key = s"spec:memo-persisted:${java.util.UUID.randomUUID}"
-    val prep = PlanCache.memoPersisted(spark, key) {
+    val prep = graft.operators.Memo.frame(spark, key, persist = true) {
       Graph.degreeEdges(
         spark.range(1000).select((col("id") % 50).as("src"), (col("id") % 37).as("dst")))
     }

@@ -101,7 +101,7 @@ class IndexStreamSpec extends SparkSpec {
     // Freeze the quantizer at the SAME adaptive operating point plain
     // ivfTopK derives (k = ceil(sqrt(n))), so served == plain holds.
     val kc = Similarity.adaptiveCentroids(
-      graft.operators.PlanCache.countMemo(all))
+      graft.operators.Memo.count(all))
     Similarity.commitCentroidsIfAbsent(spark, s"$tmp/cents")(
       Similarity.kmeansCentroids(all, kc, 3, Similarity.trainRowsFor(kc)))
     val cents = Similarity.readCommittedCentroids(spark, s"$tmp/cents")

@@ -426,7 +426,7 @@ class SimilaritySpec extends SparkSpec {
     // (k = ceil(sqrt(n))); the stored serve then re-derives its probe
     // width from the reloaded quantizer's own row count.
     val kc = Similarity.adaptiveCentroids(
-      graft.operators.PlanCache.countMemo(emb))
+      graft.operators.Memo.count(emb))
     Similarity.saveCentroids(spark,
       Similarity.kmeansCentroids(emb, kc, 3, Similarity.trainRowsFor(kc)), root)
     val cents = Similarity.loadCentroids(spark, root)
